@@ -73,11 +73,10 @@ def _bytes_prefix_to_u64(values: np.ndarray) -> np.ndarray:
 def normalize_column(col) -> NormalizedKey:
     """Normalize a pandas Series / numpy array into uint64 codes.
 
-    Null handling: nulls sort FIRST (consistent with Spark's default
-    ``asc_nulls_first``); the code reserves the bottom of the range by
-    shifting non-null codes up by 1 where the dtype leaves headroom —
-    instead we use a separate null bit folded into ``codes`` via
-    min-code assignment, which is exact for all supported dtypes.
+    Null handling: nulls sort FIRST (Spark's default ``asc_nulls_first``).
+    Null rows get code 0 and the result carries an ``isnull`` mask;
+    ``key_matrix`` turns the mask into a null-flag column placed before
+    the codes, so the compare stays exact without giving up a code bit.
     """
     if isinstance(col, pd.Series):
         isnull = col.isna().to_numpy()
@@ -149,20 +148,18 @@ def pack_columns(mat: np.ndarray) -> np.ndarray | None:
         return mat[:, 0]
     if n == 0:
         return np.zeros(0, dtype=np.uint64)
+    los = []
     widths = []
-    shifted = []
     for j in range(k):
         col = mat[:, j]
         lo = col.min()
-        span = int(col.max() - lo)
-        w = max(1, span.bit_length())
-        widths.append(w)
-        shifted.append(col - lo)
+        los.append(lo)
+        widths.append(max(1, int(col.max() - lo).bit_length()))
     if sum(widths) > 64:
         return None
     packed = np.zeros(n, dtype=np.uint64)
-    for w, col in zip(widths, shifted):
-        packed = (packed << np.uint64(w)) | col
+    for j, (w, lo) in enumerate(zip(widths, los)):
+        packed = (packed << np.uint64(w)) | (mat[:, j] - lo)
     return packed
 
 
@@ -199,8 +196,15 @@ def pack_columns_shared(mats: list[np.ndarray]) -> list[np.ndarray] | None:
 
 
 def lexsort_indices(mat: np.ndarray) -> np.ndarray:
-    """Stable ascending argsort of an (n, k) uint64 key matrix."""
-    if mat.shape[1] == 0:
-        return np.arange(mat.shape[0])
+    """Stable ascending argsort of an (n, k) uint64 key matrix.
+
+    When the key packs into one uint64 (``pack_columns``: order-
+    preserving and injective on the key), one stable argsort of the
+    packed codes gives the same permutation as the k-pass lexsort, ties
+    included.  Wider keys take the lexsort.
+    """
+    packed = pack_columns(mat)
+    if packed is not None:
+        return np.argsort(packed, kind="stable")
     # np.lexsort: last key is primary -> reverse column order.
     return np.lexsort(tuple(mat[:, j] for j in range(mat.shape[1] - 1, -1, -1)))

@@ -308,3 +308,75 @@ def test_exact_mode_subset_keys_sorted(tmp_path):
     # multiset preserved
     assert sorted(out["payload"]) == sorted(frame["payload"])
     assert m.ovc_compares > 0
+
+
+def test_fast_mode_multi_pass_counters_pinned(tmp_path):
+    """Fast-mode counters at the reference's multi-pass geometry (the
+    ``kernel_reference`` plan at 1/8 scale): Test0 input filtered on
+    c0 > 1, a memory budget of 1/64 of the input and pages of 1/8 of
+    the budget, so W = 74 runs merge at fan-in 7 over four passes.
+    Pinned values: update ONLY with an explained kernel change."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from external_merge_sort_loser_tree_ovc_spark.sources.fixtures import kernel_rows
+
+    n = 128_000
+    rows = kernel_rows(n, cols=4, domain=10_000, scan_type=0, seed=7)
+    keys = [f"c{i}" for i in range(4)]
+    scan = pa.Table.from_arrays([pa.array(rows[:, i]) for i in range(4)], names=keys)
+    filtered = scan.filter(pc.greater(scan["c0"], 1))
+    budget = n // 64
+    sorter = ExternalSorter(
+        key_cols=keys,
+        spill_dir=str(tmp_path / "s"),
+        memory_budget_rows=budget,
+        batch_rows=budget // 8,
+        mode="fast",
+    )
+    batches = (pa.Table.from_batches([b]) for b in filtered.to_batches(65_536))
+    out = pa.concat_tables(list(sorter.sort_tables(batches)))
+    m = sorter.metrics
+    got = {
+        k: getattr(m, k)
+        for k in (
+            "runs_formed", "fan_in", "initial_fan_in", "depth", "passes",
+            "spill_rows", "ovc_compares", "col_compares",
+        )
+    }
+    assert got == {
+        "runs_formed": 74,
+        "fan_in": 7,
+        "initial_fan_in": 2,
+        "depth": 4,
+        "passes": 4,
+        "spill_rows": 320_250,
+        "ovc_compares": 875_148,
+        "col_compares": 0,
+    }
+    mat = np.column_stack([filtered[c].to_numpy() for c in keys])
+    order = np.lexsort(tuple(mat[:, j] for j in range(3, -1, -1)))
+    assert (np.column_stack([out[c].to_numpy() for c in keys]) == mat[order]).all()
+
+
+@pytest.mark.parametrize("emit_rows", [0, -1])
+def test_bad_emit_rows_fails_before_reading_input(tmp_path, emit_rows):
+    """A non-positive emit_rows would emit nothing; it must be rejected
+    when the sorter is built, not after the input is sorted and spilled."""
+    consumed = []
+
+    def batches():
+        for i in range(3):
+            consumed.append(i)
+            yield kernel_frame(100, 4, 10, 0, seed=i)
+
+    with pytest.raises(ValueError, match="emit_rows"):
+        sorter = ExternalSorter(
+            key_cols=["c0"],
+            spill_dir=str(tmp_path / "s"),
+            memory_budget_rows=50,
+            batch_rows=10,
+            emit_rows=emit_rows,
+        )
+        next(sorter.sort(batches()))
+    assert consumed == []
