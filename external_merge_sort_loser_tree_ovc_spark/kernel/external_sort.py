@@ -112,8 +112,10 @@ def _merge_tables(
     """Vectorized merge of sorted Arrow tables into one sorted table.
 
     ``counters``: optional {"ovc", "col"} dict accumulated with the
-    packed-path comparison counts (``vmerge.merge2_compare_counts``) —
-    instrumentation from the PRODUCTION merge, not a shadow sort.  The
+    packed-path comparison counts — instrumentation from the PRODUCTION
+    merge, not a shadow sort: ``vmerge.merge_runs_packed`` merges the
+    runs in one stable sort and derives the tournament's compares in
+    closed form from the run boundaries and equal-key groups.  The
     matrix/collation fallbacks perform no countable head-to-head events
     (one stable lexsort) and leave the counters untouched.
     """
@@ -192,7 +194,8 @@ class ExternalSorter:
     metrics: SortMetrics = field(default_factory=SortMetrics)
     _fingerprint: int = 0
     # production-path comparison counters ({"ovc", "col"}), accumulated
-    # by every packed vectorized merge (vmerge.merge2_compare_counts)
+    # by every packed merge step (one stable sort; counts in closed form
+    # from run boundaries and equal-key groups, vmerge.merge_runs_packed)
     _cmp: dict = field(default_factory=dict)
     # write-through cache: when checkpoint_inputs spills the tail, the
     # just-written run is served from memory instead of read back from

@@ -179,6 +179,11 @@ def key_matrix_table(
 ) -> tuple[np.ndarray, bool]:
     """(n, k') uint64 matrix + exactness, straight from Arrow buffers.
 
+    The matrix is column-major (``order="F"``): each key column — and
+    the null-flag column placed before a nullable key's codes — is one
+    contiguous array, so packing and the lexsort fallback read whole
+    columns without striding.
+
     ``string_ranks=True`` encodes string/binary key columns as exact
     dense ranks (``_string_rank_codes``) instead of 8-byte prefixes —
     the matrix is then exact for any scalar schema, at the cost of a
@@ -208,9 +213,10 @@ def key_matrix_table(
             codes = nk.codes
         cols.append(codes)
         exact = exact and nk.exact
-    if not cols:
-        return np.zeros((tbl.num_rows, 0), dtype=np.uint64), True
-    return np.column_stack(cols), exact
+    mat = np.empty((tbl.num_rows, len(cols)), dtype=np.uint64, order="F")
+    for j, codes in enumerate(cols):
+        mat[:, j] = codes
+    return mat, exact
 
 
 def _is_stringish(t) -> bool:

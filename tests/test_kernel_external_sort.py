@@ -221,18 +221,30 @@ def test_planner_static_schedule():
 
 
 def test_fast_mode_production_merge_counters(tmp_path):
-    """Round-3: fast-mode comparison counters come from the ONE
-    production packed merge (vmerge.merge2_compare_counts), not a shadow
-    exact sort.  Deterministic geometry -> pinned counts."""
+    """Fast-mode comparison counters come from the ONE production packed
+    merge: each merge step is one stable sort of its runs, and the
+    tournament's compares are derived in closed form from the run
+    boundaries and the equal-key groups of that sort (no shadow exact
+    sort).  Deterministic geometry -> pinned counts, with code ties
+    (``col_compares > 0``).  Update ONLY with an explained kernel change."""
     n, mem, batch = 8000, 1000, 100
     frame = kernel_frame(n, 4, 10, 0, seed=17)
     out, m = run_sort(tmp_path, frame, list(frame.columns), mem, batch, mode="fast")
     assert len(out) == n
     assert_sorted(out, list(frame.columns))
     assert m.mode == "fast"
-    assert m.ovc_compares > 0
     # tournament of pairwise merges: <= ceil(log2 W) compares/row total
     assert m.ovc_compares + m.col_compares <= n * math.ceil(math.log2(m.runs_formed))
+    assert _counters(m) == {
+        "runs_formed": 9,
+        "fan_in": 9,
+        "initial_fan_in": 9,
+        "depth": 2,
+        "passes": 2,
+        "spill_rows": 7_200,
+        "ovc_compares": 23_209,
+        "col_compares": 2_470,
+    }
     # same input, same geometry -> identical counters (determinism)
     out2, m2 = run_sort(
         tmp_path, frame, list(frame.columns), mem, batch, mode="fast", subdir="s2"
@@ -310,41 +322,63 @@ def test_exact_mode_subset_keys_sorted(tmp_path):
     assert m.ovc_compares > 0
 
 
+_PINNED_COUNTERS = (
+    "runs_formed", "fan_in", "initial_fan_in", "depth", "passes",
+    "spill_rows", "ovc_compares", "col_compares",
+)
+
+
+def _counters(m) -> dict:
+    return {k: getattr(m, k) for k in _PINNED_COUNTERS}
+
+
+def _sort_arrow_rows(tmp_path, table, budget, batch, chunk_rows):
+    """Fast-mode sort of an Arrow table on all its columns, fed in
+    ``chunk_rows`` batches; asserts the output equals a stable lexsort
+    and returns the metrics."""
+    import pyarrow as pa
+
+    keys = table.column_names
+    sorter = ExternalSorter(
+        key_cols=keys,
+        spill_dir=str(tmp_path / "s"),
+        memory_budget_rows=budget,
+        batch_rows=batch,
+        mode="fast",
+    )
+    batches = (pa.Table.from_batches([b]) for b in table.to_batches(chunk_rows))
+    out = pa.concat_tables(list(sorter.sort_tables(batches)))
+    mat = np.column_stack([table[c].to_numpy() for c in keys])
+    order = np.lexsort(tuple(mat[:, j] for j in range(len(keys) - 1, -1, -1)))
+    assert (np.column_stack([out[c].to_numpy() for c in keys]) == mat[order]).all()
+    return sorter.metrics
+
+
+def _kernel_table(n, cols, domain, seed):
+    import pyarrow as pa
+
+    from external_merge_sort_loser_tree_ovc_spark.sources.fixtures import kernel_rows
+
+    rows = kernel_rows(n, cols=cols, domain=domain, scan_type=0, seed=seed)
+    return pa.Table.from_arrays(
+        [pa.array(rows[:, i]) for i in range(cols)], names=[f"c{i}" for i in range(cols)]
+    )
+
+
 def test_fast_mode_multi_pass_counters_pinned(tmp_path):
     """Fast-mode counters at the reference's multi-pass geometry (the
     ``kernel_reference`` plan at 1/8 scale): Test0 input filtered on
     c0 > 1, a memory budget of 1/64 of the input and pages of 1/8 of
     the budget, so W = 74 runs merge at fan-in 7 over four passes.
     Pinned values: update ONLY with an explained kernel change."""
-    import pyarrow as pa
     import pyarrow.compute as pc
 
-    from external_merge_sort_loser_tree_ovc_spark.sources.fixtures import kernel_rows
-
     n = 128_000
-    rows = kernel_rows(n, cols=4, domain=10_000, scan_type=0, seed=7)
-    keys = [f"c{i}" for i in range(4)]
-    scan = pa.Table.from_arrays([pa.array(rows[:, i]) for i in range(4)], names=keys)
+    scan = _kernel_table(n, cols=4, domain=10_000, seed=7)
     filtered = scan.filter(pc.greater(scan["c0"], 1))
     budget = n // 64
-    sorter = ExternalSorter(
-        key_cols=keys,
-        spill_dir=str(tmp_path / "s"),
-        memory_budget_rows=budget,
-        batch_rows=budget // 8,
-        mode="fast",
-    )
-    batches = (pa.Table.from_batches([b]) for b in filtered.to_batches(65_536))
-    out = pa.concat_tables(list(sorter.sort_tables(batches)))
-    m = sorter.metrics
-    got = {
-        k: getattr(m, k)
-        for k in (
-            "runs_formed", "fan_in", "initial_fan_in", "depth", "passes",
-            "spill_rows", "ovc_compares", "col_compares",
-        )
-    }
-    assert got == {
+    m = _sort_arrow_rows(tmp_path, filtered, budget, budget // 8, 65_536)
+    assert _counters(m) == {
         "runs_formed": 74,
         "fan_in": 7,
         "initial_fan_in": 2,
@@ -354,9 +388,25 @@ def test_fast_mode_multi_pass_counters_pinned(tmp_path):
         "ovc_compares": 875_148,
         "col_compares": 0,
     }
-    mat = np.column_stack([filtered[c].to_numpy() for c in keys])
-    order = np.lexsort(tuple(mat[:, j] for j in range(3, -1, -1)))
-    assert (np.column_stack([out[c].to_numpy() for c in keys]) == mat[order]).all()
+
+
+def test_fast_mode_duplicate_heavy_multi_pass_counters_pinned(tmp_path):
+    """The same multi-pass geometry (W = 74, fan-in 7, four passes) on a
+    two-column key drawn from 50 values per column: most merge compares
+    meet an equal key, so ``col_compares`` is far from zero at every
+    pass.  Pinned values: update ONLY with an explained kernel change."""
+    table = _kernel_table(64_000, cols=2, domain=50, seed=11)
+    m = _sort_arrow_rows(tmp_path, table, 1000, 125, 125)
+    assert _counters(m) == {
+        "runs_formed": 74,
+        "fan_in": 7,
+        "initial_fan_in": 2,
+        "depth": 4,
+        "passes": 4,
+        "spill_rows": 160_125,
+        "ovc_compares": 282_502,
+        "col_compares": 155_031,
+    }
 
 
 @pytest.mark.parametrize("emit_rows", [0, -1])

@@ -82,13 +82,15 @@ def test_sort_matches_pandas_any_geometry(tmp_path_factory, n, domain, mem, batc
 def test_merge2_compare_counts_match_sequential_merge(a, b):
     """The vectorized merge-path counters must equal the literal
     streaming 2-way merge: one compare per pop while both runs are
-    non-empty; ties go to run A and count as 'col' (code tie)."""
-    from external_merge_sort_loser_tree_ovc_spark.kernel import vmerge
+    non-empty; ties go to run A and count as 'col' (code tie).  These
+    counters are the oracle that ``vmerge.merge_runs_packed``'s closed
+    form is checked against (``test_kernel_sort_merge_paths``)."""
+    from merge_oracle import merge2_compare_counts, merge2_positions
 
     ka = np.sort(np.asarray(a, dtype=np.uint64))
     kb = np.sort(np.asarray(b, dtype=np.uint64))
-    pa_, pb_ = vmerge.merge2_positions(ka, kb)
-    got_ovc, got_col = vmerge.merge2_compare_counts(ka, kb, pa_, pb_)
+    pa_, pb_ = merge2_positions(ka, kb)
+    got_ovc, got_col = merge2_compare_counts(ka, kb, pa_, pb_)
     # reference simulation
     i = j = ovc = col = 0
     while i < len(ka) and j < len(kb):

@@ -4,9 +4,14 @@
   code when the key fits in 64 bits.  It must return exactly the
   permutation of a stable ``np.lexsort`` over the key columns, ties
   included, and fall back to that lexsort for wider keys.
-- Pairwise merge: ``vmerge.merge2_positions`` takes its positions from
-  one linear stable merge.  They must equal the closed-form merge path
-  ``arange + searchsorted`` (ties to run A), kept here as the oracle.
+- k-way merge: ``vmerge.merge_runs_packed`` does one stable sort per
+  merge step and derives the comparison counts in closed form.  Its
+  gather order and ``(ovc, col)`` must equal the former adjacent-pair
+  tournament of 2-way merges, kept as the oracle in ``merge_oracle``;
+  that oracle's pairwise positions stay checked against the merge path
+  ``arange + searchsorted`` (ties to run A).
+- Key matrix layout: ``key_matrix_table`` returns a column-major
+  matrix, and both sort paths read it exactly like a row-major copy.
 """
 
 import numpy as np
@@ -17,6 +22,7 @@ from hypothesis import HealthCheck, given, settings, strategies as st
 from external_merge_sort_loser_tree_ovc_spark.kernel import keys as K
 from external_merge_sort_loser_tree_ovc_spark.kernel import vmerge
 from external_merge_sort_loser_tree_ovc_spark.kernel.keys_arrow import key_matrix_table
+from merge_oracle import merge2_positions, merge_runs_tournament
 
 U64_MAX = np.iinfo(np.uint64).max
 
@@ -135,11 +141,133 @@ def test_lexsort_indices_wide_keys_take_lexsort(bits):
     assert (K.lexsort_indices(mat) == lexsort_oracle(mat)).all()
 
 
-# -- pairwise merge -----------------------------------------------------------
+# -- key matrix layout --------------------------------------------------------
+
+
+@pytest.mark.parametrize(
+    "nulls,wide", [(False, False), (True, False), (False, True)],
+    ids=["plain", "null-flag", "wide"],
+)
+def test_key_matrix_table_is_column_major(nulls, wide):
+    """Each key column is one contiguous array; packing, the packed
+    sort and the lexsort fallback (``wide``: two full-range columns)
+    give the same answers on it as on a row-major ``column_stack``
+    copy."""
+    rng = np.random.default_rng(5)
+    n = 3000
+    s = rng.choice(["x", "yy", "zzz", ""], n)
+    # a nullable string key: its dense ranks and null flag stay narrow,
+    # so the key still packs (a nullable integer spans all 64 bits)
+    mask = (rng.integers(0, 7, n) == 0) if nulls else None
+    span = (np.iinfo(np.int64).min, np.iinfo(np.int64).max) if wide else (-5, 5)
+    tbl = pa.table(
+        {
+            "s": pa.array(s, mask=mask),
+            "b": pa.array(rng.integers(*span, n) if wide else rng.integers(0, 1 << 40, n)),
+            "c": pa.array(rng.integers(*span, n)),
+        }
+    )
+    mat, exact = key_matrix_table(tbl, ["s", "b", "c"], string_ranks=True)
+    assert exact
+    assert mat.shape == (n, 4 if nulls else 3)
+    assert mat.flags.f_contiguous
+    rows = np.column_stack([mat[:, j] for j in range(mat.shape[1])])
+    assert rows.flags.c_contiguous and (rows == mat).all()
+    assert (K.pack_columns(mat) is None) == wide
+    assert (K.lexsort_indices(mat) == K.lexsort_indices(rows)).all()
+    assert (K.lexsort_indices(mat) == lexsort_oracle(rows)).all()
+    cuts = [0, 1000, 1000, 2500, n]
+    got = K.pack_columns_shared([mat[lo:hi] for lo, hi in zip(cuts, cuts[1:])])
+    want = K.pack_columns_shared([rows[lo:hi] for lo, hi in zip(cuts, cuts[1:])])
+    if wide:
+        assert got is None and want is None
+        return
+    assert len(got) == len(want)
+    for g, w in zip(got, want):
+        assert (g == w).all()
+
+
+# -- k-way merge ----------------------------------------------------------------
+
+
+def _assert_merge_matches_tournament(runs):
+    got_counts, want_counts = {}, {}
+    got = vmerge.merge_runs_packed(runs, got_counts)
+    want = merge_runs_tournament(runs, want_counts)
+    assert got.shape == want.shape
+    assert (got == want).all()
+    assert (got_counts.get("ovc", 0), got_counts.get("col", 0)) == (
+        want_counts.get("ovc", 0),
+        want_counts.get("col", 0),
+    )
+    # without counters the gather order is the same
+    assert (vmerge.merge_runs_packed(runs) == want).all()
+
+
+def _sorted_run(rng, n: int, domain) -> np.ndarray:
+    if domain is None:
+        v = rng.integers(0, U64_MAX, n, dtype=np.uint64, endpoint=True)
+    else:
+        v = rng.integers(0, domain, n).astype(np.uint64)
+    return np.sort(v)
+
+
+@_SETTINGS
+@given(
+    lens=st.lists(st.integers(0, 300), min_size=1, max_size=16),
+    domain=st.sampled_from([1, 2, 4, 30, 1_000_000, None]),
+    seed=st.integers(0, 2**31 - 1),
+)
+def test_merge_runs_packed_matches_tournament(lens, domain, seed):
+    """k = 1..16 runs of 0..300 rows (empty runs included), duplicate-
+    heavy domains and full-range uint64: same gather order and same
+    ``(ovc, col)`` as the tournament of pairwise merges."""
+    rng = np.random.default_rng(seed)
+    _assert_merge_matches_tournament([_sorted_run(rng, n, domain) for n in lens])
+
+
+@pytest.mark.parametrize(
+    "lens",
+    [(1, 10_000), (10_000, 1), (1, 10_000, 1), (0, 10_000, 0, 1), (5000, 0, 3, 5000)],
+    ids=lambda t: "-".join(map(str, t)),
+)
+@pytest.mark.parametrize("domain", [1, 4, 1000, None], ids=["one", "ties", "mixed", "wide"])
+def test_merge_runs_packed_lopsided(lens, domain):
+    rng = np.random.default_rng(sum(lens))
+    _assert_merge_matches_tournament([_sorted_run(rng, n, domain) for n in lens])
+
+
+def test_merge_runs_packed_uint64_extremes():
+    """0 and 2**64 - 1 in several runs, tied within and across runs."""
+    top = U64_MAX
+    mid = np.uint64(1 << 63)
+    runs = [
+        np.array([0, 0, 1, mid - 1, mid, top, top], dtype=np.uint64),
+        np.array([0, mid, mid, top - 1, top], dtype=np.uint64),
+        np.zeros(0, dtype=np.uint64),
+        np.full(4, top, np.uint64),
+        np.zeros(3, np.uint64),
+        np.array([top], dtype=np.uint64),
+    ]
+    _assert_merge_matches_tournament(runs)
+    _assert_merge_matches_tournament(runs[::-1])
+
+
+def test_merge_runs_packed_degenerate():
+    """No runs, one run (nothing counted), only empty runs."""
+    counters = {}
+    assert vmerge.merge_runs_packed([], counters).shape == (0,)
+    one = np.array([3, 1, 2], dtype=np.uint64)  # a single run is taken as is
+    assert (vmerge.merge_runs_packed([one], counters) == np.arange(3)).all()
+    assert counters == {}
+    _assert_merge_matches_tournament([np.zeros(0, np.uint64)] * 3)
+
+
+# -- pairwise merge (the oracle's building block) -------------------------------
 
 
 def _assert_positions(ka, kb):
-    got = vmerge.merge2_positions(ka, kb)
+    got = merge2_positions(ka, kb)
     want = searchsorted_oracle(ka, kb)
     for g, w in zip(got, want):
         assert g.dtype == np.int64
