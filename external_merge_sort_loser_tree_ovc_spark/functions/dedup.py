@@ -51,18 +51,6 @@ def _drop_hot_keys(df: DataFrame, keys: list[str], cap: int) -> DataFrame:
 
 # --- exact ------------------------------------------------------------------
 
-def exact_dedup(df: DataFrame, id_col: str, text_col: str = "text") -> DataFrame:
-    """One surviving id per distinct text: (text-group, survivor_id,
-    dup_count).  Shuffles a hash of the text, not the text itself."""
-    return (
-        df.groupBy(F.xxhash64(F.col(text_col)).alias("text_hash"))
-        .agg(
-            F.min(id_col).alias("survivor_id"),
-            F.count(F.lit(1)).alias("dup_count"),
-        )
-    )
-
-
 def exact_dedup_scale_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Aggregate fingerprint of the SCALE-path exact dedup (group on
     ``xxhash64(text)`` so the shuffle key is 8 bytes, never the text):
@@ -226,12 +214,13 @@ FROM sh a JOIN sh b ON a.sh = b.sh AND a.{id_col} < b.{id_col}
 def simhash_band_table(df: DataFrame, id_col: str, text_col: str = "text") -> DataFrame:
     """(id, b0..b3): four 15-bit simhash bands per document.
 
-    Arrow/NumPy scale path (identical arithmetic to
-    :func:`simhash_band_table_catalyst`): the 60 rehash votes per word
-    hash are one vectorized (words x 60) matrix per Arrow batch instead
-    of a word explode + 60-column aggregate (guide §4.2).  All
-    int64-safe: max(a_k) * max(wh) < P^2 ~ 4.7e18 < 2^63.  Doc-local,
-    so the explode/agg shuffle disappears from the plan.
+    The 60 rehash votes per word hash are one vectorized (words x 60)
+    NumPy matrix per Arrow batch, with the texthash.py vote arithmetic
+    (int64-safe: max(a_k) * max(wh) < P^2 ~ 4.7e18 < 2^63).  Doc-local,
+    so the plan has no shuffle.  ``simhash_hamming_oracle_sql`` emits
+    the same bands for DuckDB; ``test_simhash_capped_oracle_matches`` and
+    ``test_null_text_parity_engine_vs_oracle`` compare the pairs built on
+    this table against it.
 
     NULL-text docs are excluded (no content -> no near-dup candidate);
     the oracle generator applies the same predicate, keeping engine and
@@ -275,31 +264,6 @@ def simhash_band_table(df: DataFrame, id_col: str, text_col: str = "text") -> Da
                 yield pd.DataFrame(out)
 
     return src.mapInPandas(run, schema=out_schema)
-
-
-def simhash_band_table_catalyst(
-    df: DataFrame, id_col: str, text_col: str = "text"
-) -> DataFrame:
-    """Catalyst reference implementation of :func:`simhash_band_table`
-    (explode-agg shape; kept for the parity pytest)."""
-    words = df.filter(F.col(text_col).isNotNull()).select(
-        F.col(id_col), F.explode(F.split(F.col(text_col), " ")).alias("_w")
-    ).withColumn("_h", F.expr(T.whash_sql("_w")))
-    nbits = T.SIMHASH_BANDS * T.SIMHASH_BAND_BITS
-    aggs = [
-        F.sum(F.expr(T.simhash_bit_vote_sql("_h", k))).alias(f"_sb{k}")
-        for k in range(nbits)
-    ]
-    grouped = words.groupBy(id_col).agg(*aggs)
-    band_cols = []
-    for b in range(T.SIMHASH_BANDS):
-        acc = None
-        for j in range(T.SIMHASH_BAND_BITS):
-            k = b * T.SIMHASH_BAND_BITS + j
-            bit = F.when(F.col(f"_sb{k}") > 0, F.lit(1 << j)).otherwise(F.lit(0))
-            acc = bit if acc is None else acc + bit
-        band_cols.append(acc.cast("bigint").alias(f"b{b}"))
-    return grouped.select(F.col(id_col), *band_cols)
 
 
 def simhash_hamming_pairs(

@@ -4,7 +4,7 @@ The Spark mapping of the reference's Sort operator (SURVEY §1.3 / §3.4):
 
   repartitionByRange(keys)   — the shuffle takes the role of the
                                reference's process boundary/HDD transfer,
-  mapInPandas(kernel)        — each task runs the vectorized OVC
+  mapInArrow(kernel)         — each task runs the vectorized OVC
                                loser-tree external sort (kernel/) over its
                                Arrow batch stream, spilling to
                                executor-local run files,
@@ -33,7 +33,6 @@ import shutil
 import tempfile
 import uuid
 
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..kernel.external_sort import ExternalSorter
@@ -45,7 +44,7 @@ DEFAULT_BATCH_ROWS = 1 << 16
 def _partition_kernel(
     key_cols, budget, batch_rows, mode, checkpoint_dir, metrics_dir, checkpoint_inputs
 ):
-    """Build the mapInPandas function (must be picklable, import-light)."""
+    """Build the mapInArrow function (must be picklable, import-light)."""
 
     def run(iterator):
         import pyarrow as pa
@@ -92,204 +91,6 @@ def _partition_kernel(
     return run
 
 
-_SORTABLE_BOUND_TYPES = {
-    "tinyint", "smallint", "int", "bigint", "string", "date", "boolean",
-}
-
-
-def _py_bound_key(vals: tuple) -> tuple:
-    """Python sort key matching Spark's ascending-nulls-first order for
-    the `_SORTABLE_BOUND_TYPES`: strings compare as UTF-8 BYTES (Spark's
-    UTF8String binary order; Python str order is code-point order — the
-    two diverge past ASCII only for surrogate-range code points, but
-    bytes are always safe), NULL sorts first via a presence flag."""
-    out = []
-    for v in vals:
-        if v is None:
-            out.append((0, b""))
-        elif isinstance(v, str):
-            out.append((1, v.encode("utf-8")))
-        else:
-            out.append((1, v))
-    return tuple(out)
-
-
-def _pyarrow_key_sample(
-    df: DataFrame,
-    keys: list[str],
-    cap_rows: int,
-    max_bytes: int = 1 << 30,
-) -> "pd.DataFrame | None":
-    """Driver-side stride sample of the scan's key columns via pyarrow
-    (see call site).  Returns None whenever the input is not a modest
-    set of local parquet files carrying the key columns — callers fall
-    back to the distributed sample."""
-    try:
-        files = df.inputFiles()
-    except Exception:
-        return None
-    if not files or len(files) > 64:
-        return None
-    paths = []
-    for f in files:
-        if f.startswith("file:"):
-            f = f[5:]
-            while f.startswith("//"):
-                f = f[1:]
-        if not f.startswith("/") or not f.endswith(".parquet"):
-            return None
-        paths.append(f)
-    try:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        if sum(os.path.getsize(p) for p in paths) > max_bytes:
-            return None
-        tables = []
-        for p in paths:
-            pf = pq.ParquetFile(p)
-            if not set(keys) <= set(pf.schema_arrow.names):
-                return None
-            tables.append(pq.read_table(p, columns=list(keys)))
-        t = pa.concat_tables(tables)
-        if t.num_rows == 0:
-            return None
-        step = max(1, t.num_rows // cap_rows)
-        idx = pa.array(range(0, t.num_rows, step))
-        return t.take(idx).to_pandas()[list(keys)]
-    except Exception:
-        return None
-
-
-def range_partition_fixed_bounds(
-    df: DataFrame,
-    keys: list[str],
-    n: int,
-    *,
-    sample_mod: int = 16,
-    sample_cap: int = 1 << 15,
-) -> DataFrame | None:
-    """Order-preserving range partitioning WITHOUT Spark's sampling pass.
-
-    ``repartitionByRange`` computes its bounds by re-running the child
-    plan and reservoir-sampling it — for a payload-carrying scan that is
-    a second full pass over every column (measured ~2 s of the 5 s
-    q_sort_lineitem at sf1).  Here the bounds come from a column-pruned
-    scan of the KEY columns only (a content-hash sample, deterministic
-    under retries, Arrow-collected), and rows route to partitions
-    through a BALANCED binary-search tree of codegen'd struct
-    comparisons — ceil(log2 n) struct compares per row (a linear
-    CASE ladder measured 20 s at sf1; the struct tree is ~0.3 s) —
-    then the murmur3 identity-key mapping pins bucket i to partition i.
-    Guide §8: decide placement with small rows, move the payload once.
-    Struct comparison is ascending-nulls-first per field, exactly the
-    kernel's sort order (verified in pytest).
-
-    Bounds only affect partition BALANCE: any monotone bucket mapping
-    yields the same globally sorted output, so a skewed sample can
-    never change results.  Returns None when a key type is outside the
-    supported set or the identity-key table is unavailable — callers
-    fall back to ``repartitionByRange``.
-    """
-    dtypes = dict(df.dtypes)
-    if n < 2:
-        return df.repartition(1)
-    if not all(dtypes.get(k) in _SORTABLE_BOUND_TYPES for k in keys):
-        return None
-    # Size gate: the win over repartitionByRange is avoiding its second
-    # full-payload evaluation, which only matters when the payload is
-    # big; below the threshold the extra sample/identity jobs cost more
-    # than they save (measured +0.5 s at sf0.1 vs -2 s at sf1), so
-    # small inputs keep Spark's native path.  Catalyst's sizeInBytes
-    # estimate needs no job.
-    try:
-        est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:
-        est = 1 << 60  # unknown: assume big (the at-scale default)
-    if est < int(
-        os.environ.get("SPARK_GRAFT_RANGE_BOUNDS_MIN_BYTES", str(64 << 20))
-    ):
-        return None
-    spark = df.sparkSession
-    # Bounds memo: like _IDENTITY_KEYS_CACHE, partitioning METADATA is
-    # process-cacheable — bounds never affect results (any monotone
-    # bucketing yields the same sorted output), only balance, so a
-    # repeat call on the same (keys, n, size-estimate) skips the sample
-    # job.  Never persisted across processes; never caches data.
-    memo_key = (tuple(keys), n, est)
-    bounds = _BOUNDS_CACHE.get(memo_key)
-    xs = _identity_shuffle_keys(spark, n)
-    if xs is None:
-        return None
-    if bounds is None:
-        # fast path: stride-sample the key columns straight from the
-        # scan's parquet files on the driver — no Spark job, no
-        # first-call codegen JIT for the sample plan (measured 2.9 s of
-        # the first q_sort call).  Capped by total file bytes; any
-        # mismatch (non-file source, renamed keys, too big) falls back
-        # to the distributed hash sample.  A stride sample of a file in
-        # any order is a valid bounds source — bounds affect balance
-        # only.
-        samp = _pyarrow_key_sample(df, keys, sample_cap)
-        if samp is None:
-            keyproj = df.select(*keys)
-            samp = (
-                keyproj.filter(
-                    F.pmod(
-                        F.xxhash64(*[F.col(k) for k in keys], F.lit(7919)),
-                        F.lit(sample_mod),
-                    )
-                    == 0
-                )
-                .limit(sample_cap)
-                .toPandas()
-            )
-            if len(samp) < 4 * n:  # degenerate tiny input: full key set
-                samp = keyproj.limit(sample_cap).toPandas()
-        if len(samp) == 0:
-            return df.repartition(n)
-        recs = [
-            tuple(
-                None
-                if pd.isna(v)
-                else (v.item() if hasattr(v, "item") else v)
-                for v in row
-            )
-            for row in samp.itertuples(index=False)
-        ]
-        vals = sorted(recs, key=_py_bound_key)
-        m = len(vals)
-        bounds = [vals[(i * (m - 1)) // n] for i in range(1, n)]
-        _BOUNDS_CACHE[memo_key] = bounds
-
-    st = F.struct(*[F.col(k) for k in keys])
-
-    def _lit_struct(bound: tuple):
-        return F.struct(
-            *[
-                F.lit(v).cast(dtypes[k]).alias(k)
-                for k, v in zip(keys, bound)
-            ]
-        )
-
-    def _bucket(lo: int, hi: int):
-        # binary search over buckets lo..hi; bounds[i] separates i|i+1
-        if lo == hi:
-            return F.lit(lo)
-        mid = (lo + hi) // 2
-        return F.when(st <= _lit_struct(bounds[mid]), _bucket(lo, mid)).otherwise(
-            _bucket(mid + 1, hi)
-        )
-
-    pid = _bucket(0, len(bounds))
-    part_key = F.element_at(
-        F.array(*[F.lit(x).cast("bigint") for x in xs]), (pid + 1).cast("int")
-    )
-    return (
-        df.withColumn("_pk", part_key).repartition(n, F.col("_pk")).drop("_pk")
-    )
-
-
 def external_sort_df(
     df: DataFrame,
     keys: list[str],
@@ -307,17 +108,17 @@ def external_sort_df(
     instrumented kernel with spill/merge metrics and optional
     checkpoint/resume.
 
+    Range-partitions with ``df.repartitionByRange(num_partitions, *keys)``
+    (one Exchange; Spark samples the bounds when the plan runs), then
+    sorts each partition with the kernel through ``mapInArrow``.
+    ``num_partitions`` defaults to ``spark.sql.shuffle.partitions``.
+
     ``skip_shuffle=True`` sorts within existing partitions only (useful
     after an upstream salted range partition).
     """
     if not skip_shuffle:
         n = num_partitions or int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        parted = range_partition_fixed_bounds(df, keys, n)
-        df = (
-            parted
-            if parted is not None
-            else df.repartitionByRange(n, *[F.col(k) for k in keys])
-        )
+        df = df.repartitionByRange(n, *[F.col(k) for k in keys])
     metrics_dir = os.path.join(checkpoint_dir, "_metrics") if checkpoint_dir else None
     fn = _partition_kernel(
         keys,
@@ -335,7 +136,6 @@ def external_sort_df(
 
 _NUMERIC_KEY_TYPES = {"tinyint", "smallint", "int", "bigint"}
 _IDENTITY_KEYS_CACHE: dict[int, list[int]] = {}
-_BOUNDS_CACHE: dict[tuple, list[tuple]] = {}
 
 
 def _identity_shuffle_keys(spark, n: int) -> list[int] | None:

@@ -467,3 +467,31 @@ def test_retention_single_final_aggregate(spark):
     # distinct-count rides the final aggregate (partial_count pattern),
     # not a separate distinct pass
     assert plan.count("Exchange hashpartitioning") <= 4
+
+
+def test_external_sort_plan_one_range_exchange(spark):
+    """external_sort_df range-partitions through exactly one Exchange,
+    ``rangepartitioning`` on the sort keys, and building its plan runs
+    no Spark job (no driver-side bounds sample); with skip_shuffle=True
+    the plan has no Exchange at all."""
+    import re
+
+    from external_merge_sort_loser_tree_ovc_spark.operators.sort import (
+        external_sort_df,
+    )
+
+    li = spark.read.parquet(f"{SF}/lineitem.parquet")
+    keys = ["l_returnflag", "l_linestatus", "l_orderkey", "l_linenumber"]
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    plan = plan_of(external_sort_df(li, keys, num_partitions=8))
+    assert set(tracker.getJobIdsForGroup(None)) == before, (
+        "building the sort plan launched Spark jobs"
+    )
+    exchanges = re.findall(r"^\(\d+\) Exchange", plan, re.M)
+    assert len(exchanges) == 1, plan
+    order = ", ".join(rf"{k}#\d+L? ASC NULLS FIRST" for k in keys)
+    assert re.search(rf"Arguments: rangepartitioning\({order}, 8\)", plan), plan
+
+    local = plan_of(external_sort_df(li, keys, skip_shuffle=True))
+    assert "Exchange" not in local, local

@@ -35,6 +35,39 @@ def test_external_sort_matches_orderby(spark, lineitem):
     assert a == b
 
 
+def test_external_sort_null_and_non_ascii_keys_match_orderby(spark):
+    """NULLs first in every key column, and strings in Spark's UTF-8
+    byte order: multi-byte characters, an emoji (a UTF-16 surrogate
+    pair, so UTF-16 order would put it before U+E000 and U+FF5E) and a
+    decomposed accent next to their ASCII neighbours.  ~750 rows per
+    partition against a 200-row budget, so every partition spills and
+    merges runs."""
+    import numpy as np
+    import pandas as pd
+
+    words = [None, "", "A", "a", "e", "é", "e\u0301", "f", "z",
+             "éa", "日", "日本", "日本語",
+             "\ue000", "\uff5e", "\U0001f600", "\U0001f600a"]
+    ints = [None, -(1 << 40), -5, 0, 3, 1 << 40]
+    rng = np.random.default_rng(4)
+    n = 3000
+    pdf = pd.DataFrame(
+        {
+            "s": [words[j] for j in rng.integers(0, len(words), n)],
+            "i": pd.array([ints[j] for j in rng.integers(0, len(ints), n)], "Int64"),
+            "v": np.arange(n, dtype=np.int64),
+        }
+    )
+    df = spark.createDataFrame(pdf)
+    keys = ["s", "i", "v"]  # v is unique: the order is total
+    ours = external_sort_df(
+        df, keys, num_partitions=4, memory_budget_rows=200, batch_rows=50
+    ).collect()
+    theirs = df.orderBy(*keys).collect()
+    assert [tuple(r) for r in ours] == [tuple(r) for r in theirs]
+    assert ours[0]["s"] is None and ours[-1]["s"] == "\U0001f600a"
+
+
 def test_witness_invariants_roundtrip(spark, lineitem):
     """Reference Witness contract: count + parity in == out, output has
     zero inversions (Witness.cpp:39-63)."""
